@@ -21,7 +21,7 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus
     val reps = args.collectFirst { case s if s.startsWith("reps=") => s.drop(5).toInt }
       .getOrElse(3)
     val explainDir = args.collectFirst { case s if s.startsWith("explainDir=") => s.drop(11) }

@@ -32,7 +32,7 @@ object CcCompare {
     val depth = if (args.length > 1) args(1).toInt else 100
     val chains = if (args.length > 2) args(2).toInt else 50
     Bench.cleanWorkRoot()
-    val spark = Bench.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Bench.newSession(Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -29,7 +29,7 @@ object ClosureCompare {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val replication = if (args.length > 1) args(1).toInt else 40
     Bench.cleanWorkRoot()
-    val spark = Bench.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Bench.newSession(Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // replicate the parent tree into `replication` disjoint copies (id

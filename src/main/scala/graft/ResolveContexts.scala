@@ -30,7 +30,7 @@ object ResolveContexts {
       case _ => Map.empty
     }
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .master(s"local[${Bench.cpus}]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.GraftInternal.localCheckpointWith
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines.
@@ -245,22 +246,20 @@ object DedupOps {
     // and over the dup subgraph.
     val touched = sym.select(col("a").as("id")).distinct()
     // the decimal label-sum convergence checksum is computed DURING each
-    // round's checkpoint materialization (a cast column summed in the
-    // same pass), not as a separate per-round aggregation action
-    def sumCheckpoint(df: DataFrame): (DataFrame, Long, java.math.BigDecimal) = {
-      val (d, n, s) = org.apache.spark.sql.GraftInternal
-        .localCheckpointWithCountAndDecimalSum(
-          df.withColumn("__cs", col("component").cast("decimal(38,0)")), "__cs")
-      (d.select(col("id"), col("component")), n, s)
+    // round's checkpoint materialization, not as a separate per-round
+    // aggregation action
+    def sumCheckpoint(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val (d, r) = localCheckpointWith(df, sum(col("component").cast("decimal(38,0)")))
+      (d, r.getDecimal(0))
     }
-    var (labels, _, prevSum) =
+    var (labels, prevSum) =
       sumCheckpoint(touched.select(col("id"), col("id").as("component")))
     var converged = prevSum == null // no edges at all → nothing to iterate
     var i = 0
     while (!converged && i < maxIterations) {
       val prop = sym.join(labels, sym("a") === labels("id"))
         .select(col("b").as("id"), col("component"))
-      val (next, _, s) = sumCheckpoint(labels.union(prop)
+      val (next, s) = sumCheckpoint(labels.union(prop)
         .groupBy("id").agg(min("component").as("component")))
       labels = next
       converged = s.compareTo(prevSum) == 0
@@ -317,12 +316,9 @@ object DedupOps {
     // the (count, edge-hash-sum) fixpoint checksum is computed DURING the
     // round's checkpoint materialization, not as a separate action
     def checksummedCheckpoint(e0: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
-      val (d, n, s) = org.apache.spark.sql.GraftInternal
-        .localCheckpointWithCountAndDecimalSum(
-          e0.withColumn("__h",
-            xxhash64(col("a"), col("b")).cast("decimal(38,0)")), "__h")
-      (d.select(col("a"), col("b")),
-        (n, Option(s).getOrElse(java.math.BigDecimal.ZERO)))
+      val (d, r) = localCheckpointWith(e0,
+        count(lit(1)), sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")))
+      (d, (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO)))
     }
     var (e, prev) = checksummedCheckpoint(edges.select(col("a"), col("b"))
       .filter(col("a") =!= col("b")).distinct())

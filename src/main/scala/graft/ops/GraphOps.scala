@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftInternal.localCheckpointWith
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -2243,26 +2244,26 @@ object GraphOps {
       .select(col("subj").as("a"), col("obj").as("b"))
     val sym = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint()
-    var (labels, nAlias) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
+    var (labels, stats) = localCheckpointWith(
       sym.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("component")))
+        .select(col("id"), col("id").as("component")),
+      count(lit(1)))
+    val nAlias = stats.getLong(0)
     var converged = nAlias == 0
     var i = 0
     while (!converged && i < maxIterations) {
       // the old-label join rides INSIDE the checkpointed round (one
       // `prev` column), and the convergence test — any label changed? —
-      // is a boolean column counted DURING the checkpoint
-      // materialization: one driver action per round, no separate probe
+      // is counted DURING the checkpoint materialization: one driver
+      // action per round, no separate probe
       val prop = sym.join(labels, sym("a") === labels("id"))
         .select(col("b").as("id"), col("component"))
-      val (next, _, nChanged) =
-        org.apache.spark.sql.GraftInternal.localCheckpointWithPredCount(
-          labels.select(col("id"), col("component")).union(prop)
-            .groupBy("id").agg(min("component").as("component"))
-            .join(labels.select(col("id"), col("component").as("prev")), Seq("id"))
-            .withColumn("__changed", col("component") =!= col("prev")),
-          "__changed")
-      converged = nChanged == 0
+      val (next, changed) = localCheckpointWith(
+        labels.select(col("id"), col("component")).union(prop)
+          .groupBy("id").agg(min("component").as("component"))
+          .join(labels.select(col("id"), col("component").as("prev")), Seq("id")),
+        count_if(col("component") =!= col("prev")))
+      converged = changed.getLong(0) == 0
       labels = next.select(col("id"), col("component"))
       i += 1
     }
@@ -2555,15 +2556,12 @@ object GraphOps {
     while (i < maxIterations) {
       // the "any node below k?" probe is counted during the degree
       // checkpoint's own materialization — one action per peeling round
-      val (deg, _, nBelow) =
-        org.apache.spark.sql.GraftInternal.localCheckpointWithPredCount(
-          und.select(col("a").as("node")).union(und.select(col("b").as("node")))
-            .groupBy("node").agg(count(lit(1)).as("core_degree"))
-            .withColumn("__below", col("core_degree") < k),
-          "__below")
+      val (deg, below) = localCheckpointWith(
+        und.select(col("a").as("node")).union(und.select(col("b").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("core_degree")),
+        count_if(col("core_degree") < k))
       val keep = deg.filter(col("core_degree") >= k)
-        .select(col("node"), col("core_degree"))
-      if (nBelow == 0) return keep
+      if (below.getLong(0) == 0) return keep
       und = und
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
@@ -2847,26 +2845,27 @@ object GraphOps {
     // of its own — it is a plain union of the already-materialized
     // frontier frames (guide §1.2: previously 3 jobs per level, and the
     // level count is the tree depth, so this is the whole query's cost)
-    var (frontier0, nFrontier) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
+    var (frontier, n0) = localCheckpointWith(
       sources.select(col("node")).distinct()
-        .select(col("node"), lit(0L).as("distance")))
-    var frontier = frontier0
+        .select(col("node"), lit(0L).as("distance")),
+      count(lit(1)))
     var dist = frontier
     var i = 0
-    var live = nFrontier > 0
+    var live = n0.getLong(0) > 0
     while (live && i < maxIterations) {
       // the level's distance is the loop counter — a driver constant —
       // so it never rides through the join/distinct/anti-join: the
       // frontier shuffles a single node column and the distinct and
       // anti-join share the same key shape
-      val (f, nf) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
+      val (f, nf) = localCheckpointWith(
         frontier.join(edges, frontier("node") === edges("src"))
           .select(col("dst").as("node"))
           .distinct()
           .join(dist, Seq("node"), "left_anti")
-          .select(col("node"), lit((i + 1).toLong).as("distance")))
+          .select(col("node"), lit((i + 1).toLong).as("distance")),
+        count(lit(1)))
       frontier = f
-      live = nf > 0
+      live = nf.getLong(0) > 0
       // the settled table re-materializes every FOURTH level, not every
       // level: in between it is a short union chain of already-
       // materialized frontier frames (narrow — no shuffle), so the
@@ -2907,15 +2906,16 @@ object GraphOps {
     // checkpoint+count fused into ONE job per round (the count IS the
     // materialization the checkpoint runs anyway) — guide §1.2: halve
     // the per-round driver actions before tuning anything else
-    var (paths, n) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-      edges.select(col("src"), col("dst")).distinct())
+    var (paths, n0) = localCheckpointWith(
+      edges.select(col("src"), col("dst")).distinct(), count(lit(1)))
+    var n = n0.getLong(0)
     var converged = n == 0
     var i = 0
     while (!converged && i < maxIterations) {
       val doubled = paths.as("l").join(paths.as("r"), col("l.dst") === col("r.src"))
         .select(col("l.src").as("src"), col("r.dst").as("dst"))
-      val (next, m) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-        paths.union(doubled).distinct())
+      val (next, r) = localCheckpointWith(paths.union(doubled).distinct(), count(lit(1)))
+      val m = r.getLong(0)
       converged = m == n
       paths = next
       n = m
@@ -2990,21 +2990,24 @@ object GraphOps {
     */
   private def closureDeltaOn(c: DataFrame, newEdges: DataFrame,
                              maxIterations: Int): DataFrame = {
-    val (edges, nEdges) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-      newEdges.select(col("src"), col("dst")).distinct())
-    if (nEdges == 0) return edges // empty frame, right schema
+    val (edges, nEdges) = localCheckpointWith(
+      newEdges.select(col("src"), col("dst")).distinct(), count(lit(1)))
+    if (nEdges.getLong(0) == 0) return edges // empty frame, right schema
     def chain(l: DataFrame, r: DataFrame): DataFrame =
       l.as("l").join(r.as("r"), col("l.dst") === col("r.src"))
         .select(col("l.src").as("src"), col("r.dst").as("dst"))
     val cEdges = chain(c, edges)
     // checkpoint+count fused per round, same as transitiveClosure
-    var (delta, n) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-      edges.union(cEdges).union(chain(edges, c)).union(chain(cEdges, c)).distinct())
+    var (delta, n0) = localCheckpointWith(
+      edges.union(cEdges).union(chain(edges, c)).union(chain(cEdges, c)).distinct(),
+      count(lit(1)))
+    var n = n0.getLong(0)
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
-      val (next, m) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-        delta.union(chain(delta, delta)).distinct())
+      val (next, r) = localCheckpointWith(delta.union(chain(delta, delta)).distinct(),
+        count(lit(1)))
+      val m = r.getLong(0)
       converged = m == n
       delta = next
       n = m

@@ -105,30 +105,28 @@ object Rdf {
     * the dominant c14n allocation on zero-bnode documents).
     */
   private def appendEscaped(sb: StringBuilder, str: String): Unit = {
-    var i = 0
     val n = str.length
-    var clean = true
-    while (clean && i < n) {
-      val c = str.charAt(i)
-      if (c == '\\' || c == '"' || c == '\n' || c == '\r' || c == '\t') clean = false
-      else i += 1
-    }
-    if (clean) { sb.append(str); return }
+    var i = 0
+    while (i < n && !needsEscape(str.charAt(i))) i += 1
+    if (i == n) { sb.append(str); return }
     if (i > 0) sb.append(str.substring(0, i)) // rare path: something to escape
     while (i < n) {
-      str.charAt(i) match {
-        case '\\' => sb.append("\\\\")
-        case '"' => sb.append("\\\"")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c => sb.append(c)
-      }
+      val c = str.charAt(i)
+      if (needsEscape(c)) sb.append('\\').append(c match {
+        case '\n' => 'n'
+        case '\r' => 'r'
+        case '\t' => 't'
+        case other => other // backslash and quote escape as themselves
+      })
+      else sb.append(c)
       i += 1
     }
   }
 
-  /** One N-Quads line (with trailing " .\n"). graphName "" = default graph. */
+  /** The five characters N-Quads output escapes. */
+  private def needsEscape(c: Char): Boolean =
+    c == '\\' || c == '"' || c == '\n' || c == '\r' || c == '\t'
+
   def toNQuad(q: Quad, graphName: String): String = {
     val sb = new StringBuilder(128)
     q.subject match {

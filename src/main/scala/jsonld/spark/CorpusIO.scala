@@ -16,19 +16,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * path itself, so resume works identically on local disk, HDFS, and
   * object stores (s3a://, gs://) — `java.nio.file` would silently treat
   * every remote path as absent and re-run the whole DAG.
-  *
-  * Table format: Parquet with the same partition layout Iceberg would use.
-  * No Iceberg runtime jar exists in this sandbox (verified: /opt/spark/jars
-  * has none, offline resolver) — `format` switches to "iceberg" when the
-  * jar is present; the stage contract is format-agnostic.
   */
 object CorpusIO {
 
   val DoneMarker = "_GRAFT_STAGE_DONE"
-
-  def icebergAvailable: Boolean =
-    try { Class.forName("org.apache.iceberg.spark.source.IcebergSource"); true }
-    catch { case _: Throwable => false }
 
   private def fs(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
@@ -58,34 +49,4 @@ object CorpusIO {
     }
     spark.read.parquet(dir)
   }
-
-  /** Materialize the final triple table, format-dispatched on the target:
-    *
-    *  - a PATH (contains `/`) → partitioned parquet on the `predBucket`
-    *    column the dedup stage computed (the layout Iceberg's
-    *    `bucket(pred)` produces, emulated on plain files);
-    *  - a catalog TABLE NAME → Iceberg DataFrameWriterV2 with native
-    *    `bucket(buckets, pred)` partitioning — the real 100 TB sink
-    *    (snapshot isolation, compaction, hidden partitioning). Requires
-    *    the Iceberg runtime jar + catalog conf; absent (this sandbox is
-    *    offline, /opt/spark/jars carries no Iceberg), the branch refuses
-    *    with a clear error instead of mis-writing a relative parquet dir.
-    *
-    * `df` must carry `predBucket` (see Pipeline.dedupForWrite); the
-    * iceberg branch drops it — the bucket transform supersedes it.
-    */
-  def writeTriples(df: DataFrame, target: String, buckets: Int = 64): Unit =
-    if (!target.contains("/")) {
-      if (!icebergAvailable)
-        throw new IllegalStateException(
-          s"table target '$target' needs the Iceberg runtime jar on the classpath " +
-            "(org.apache.iceberg.spark.source.IcebergSource not found); " +
-            "pass a path for the parquet branch")
-      df.drop("predBucket")
-        .writeTo(target)
-        .partitionedBy(org.apache.spark.sql.functions.bucket(buckets, df("pred")))
-        .using("iceberg")
-        .createOrReplace()
-    } else
-      df.write.mode("overwrite").partitionBy("predBucket").parquet(target)
 }

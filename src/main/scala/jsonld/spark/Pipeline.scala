@@ -16,8 +16,9 @@ import jsonld.core.Rdf._
   * core inside `mapPartitions` — one task processes many documents, no
   * per-document state ever crosses a task boundary (blank-node scopes are
   * per document). Corpus-level relational work (dedup, joins, bucketing,
-  * lineage aggregation) is left to Catalyst: it shuffles only at
-  * `dropDuplicates` / `repartition(predBucket)`.
+  * lineage aggregation) is left to Catalyst. The written graph shuffles
+  * once: dedup rides the predicate-bucketed write's own exchange
+  * ([[dedupAndWritePartitioned]]).
   *
   * Scale notes (100 TB / 1000 executors):
   * - detection is a narrow map over the scan — predicate + column pruning
@@ -65,15 +66,6 @@ object Pipeline extends Serializable {
     spark.sparkContext.longAccumulator("graft.quadsOut"),
     spark.sparkContext.longAccumulator("graft.quadsDropped"))
 
-  /** Stage 1: detection. Cheap column-level pre-filter first (pushable /
-    * codegen'd), then the per-file extractor.
-    *
-    * `filesIn` counts files entering the JVM-side extractor, i.e. AFTER
-    * the pushed-down pre-filter — counting raw scanned rows would require
-    * piercing predicate pushdown with a per-row accumulator map, defeating
-    * the pruning the stage exists for. Scanned-row totals belong to the
-    * storage layer (parquet footer counts), not this metric.
-    */
   /** Incremental ingest: keep only files that are NEW or whose content
     * CHANGED since a prior run. `prevManifest` is the previous run's
     * (path, content_sha256) table — exactly what the detect stage records
@@ -94,6 +86,15 @@ object Pipeline extends Serializable {
       .as[RepoFile]
   }
 
+  /** Stage 1: detection. Cheap column-level pre-filter first (pushable /
+    * codegen'd), then the per-file extractor.
+    *
+    * `filesIn` counts files entering the JVM-side extractor, i.e. AFTER
+    * the pushed-down pre-filter — counting raw scanned rows would require
+    * piercing predicate pushdown with a per-row accumulator map, defeating
+    * the pruning the stage exists for. Scanned-row totals belong to the
+    * storage layer (parquet footer counts), not this metric.
+    */
   def detectStage(corpus: Dataset[RepoFile], counters: Counters): Dataset[DetectedDoc] = {
     import corpus.sparkSession.implicits._
     val prefiltered = corpus.filter(
@@ -188,12 +189,14 @@ object Pipeline extends Serializable {
       .as[ErrorRow]
   }
 
-  /** Corpus-level triple dedup — set semantics across documents. Hash
-    * aggregate, map-side partial combine; the single unavoidable shuffle of
-    * the spine. docId is dropped BEFORE the shuffle: dedup keeps an
-    * arbitrary witness anyway, and at corpus scale the column is pure
-    * shuffle weight (the graph is the quad set, provenance lives in the
-    * lineage/quarantine tables).
+  /** Corpus-level triple dedup — set semantics across documents, as a
+    * hash aggregate with map-side partial combine. This is the in-memory
+    * dedup for queries that write nothing (there is no write exchange to
+    * fuse with) and the set-semantics reference the fused
+    * [[dedupForWrite]] is checked against. docId is dropped BEFORE the
+    * shuffle: dedup keeps an arbitrary witness anyway, and at corpus scale
+    * the column is pure shuffle weight (the graph is the quad set,
+    * provenance lives in the lineage/quarantine tables).
     */
   def dedupQuads(q: Dataset[QuadRow]): DataFrame =
     q.toDF().drop("docId")
@@ -217,8 +220,11 @@ object Pipeline extends Serializable {
     * (north rule: resumable from checkpointed stage outputs). Stage names
     * are deterministic, so resume is a pure function of the work dir.
     *
-    * Returns the final deduped quads DataFrame (read back from storage —
-    * lineage is cut at each checkpoint).
+    * The graph is written by the fused dedup+write
+    * ([[dedupAndWritePartitioned]]) — the same one-shuffle path the
+    * benchmark times. Returns the deduped quads read back from
+    * `workDir/graph` (lineage cut at the checkpoint), without the
+    * `predBucket` layout column.
     */
   def runResumable(spark: SparkSession, corpus: Dataset[RepoFile], workDir: String,
                    contextCache: Broadcast[Map[String, String]],
@@ -238,64 +244,30 @@ object Pipeline extends Serializable {
     CorpusIO.stage(spark, s"$workDir/quarantine") { quarantine(pipe).toDF() }
     CorpusIO.stage(spark, s"$workDir/lineage") { lineage(pipe) }
 
-    val quadsDf = CorpusIO.stage(spark, s"$workDir/stage3_quads") {
-      dedupQuads(quads(pipe))
+    val graph = s"$workDir/graph"
+    if (!CorpusIO.stageDone(spark, graph)) {
+      dedupAndWritePartitioned(quads(pipe), graph, buckets)
+      CorpusIO.markDone(spark, graph)
     }
-    if (!CorpusIO.stageDone(spark, s"$workDir/graph")) {
-      writePartitioned(quadsDf, s"$workDir/graph", buckets)
-      CorpusIO.markDone(spark, s"$workDir/graph")
-    }
-    quadsDf
-  }
-
-  /** Predicate-bucketed graph materialization: co-locates quads of one
-    * predicate family, sorted for run-length-friendly encoding and
-    * pushdown-able reads at 100 TB (SURVEY.md §2.10).
-    */
-  def writePartitioned(quadsDf: DataFrame, outDir: String, buckets: Int = 64): Unit = {
-    // repartition by (bucket, subj-salt), not bucket alone: a corpus with
-    // few distinct predicates would otherwise confine the sort+write stage
-    // to #buckets tasks regardless of cluster size; the salt keeps every
-    // core busy while partitionBy still yields one directory per bucket
-    quadsDf
-      .withColumn("predBucket", pmod(hash(col("pred")), lit(buckets)))
-      .repartition(col("predBucket"), pmod(hash(col("subj")), lit(16)))
-      .sortWithinPartitions("subj", "pred", "obj")
-      .write.mode("overwrite")
-      .partitionBy("predBucket")
-      .parquet(outDir)
+    spark.read.parquet(graph).drop("predBucket")
   }
 
   private val graphCols =
     Seq("subj", "pred", "obj", "objKind", "objDatatype", "objLang", "graph")
 
-  /** Fused dedup + bucketed materialize — ONE shuffle for both.
-    *
-    * `dropDuplicates` followed by `writePartitioned` shuffles every quad
-    * twice (hash-agg exchange, then the write repartition). But two equal
-    * quads share pred and subj, hence the same (predBucket, subjSalt)
-    * write partition — so the write's own repartition already co-locates
-    * duplicates, and dedup degenerates to dropping adjacent rows after the
-    * per-partition sort (which the bucketed layout wants anyway). Halves
-    * shuffle bytes AND skips the hash-aggregate build over what is, on a
-    * real corpus, an almost-entirely-distinct key set.
-    */
-  /** The fused plan, exposed for plan assertions (PlanSpec pins the
-    * single-Exchange shape as a regression test).
-    *
-    * Dedup mechanics: sorting by the quad columns directly is
-    * pathologically slow here — subject IRIs share long prefixes, so the
-    * sorter's 8-byte prefix disambiguates nothing and every comparison
-    * walks multiple strings. Instead rows sort by ONE xxhash64 over all
-    * quad columns (radix-friendly 8-byte key), which makes duplicate
-    * quads adjacent up to hash collisions; each equal-hash run (almost
-    * always a single row) is then deduplicated by EXACT row comparison,
-    * so a collision can never drop a distinct quad. The dynamic-partition
-    * writer re-sorts by the int predBucket only — cheap.
-    */
   /** The single-Exchange stage feeding the fused dedup (exposed so
-    * PlanSpec can pin the one-shuffle shape — the InternalRow map below
-    * hides it behind an RDD scan).
+    * PlanSpec can pin the one-shuffle shape — the InternalRow map in
+    * [[dedupForWrite]] hides it behind an RDD scan). Repartitions by
+    * (predBucket, subj-salt), not bucket alone: a corpus with few
+    * distinct predicates would otherwise confine the sort+write stage to
+    * #buckets tasks regardless of cluster size; the salt keeps every core
+    * busy while partitionBy still yields one directory per bucket.
+    *
+    * Rows sort by ONE xxhash64 over all quad columns, not by the quad
+    * columns themselves: subject IRIs share long prefixes, so the
+    * sorter's 8-byte prefix would disambiguate nothing and every
+    * comparison would walk multiple strings. The hash is a radix-friendly
+    * 8-byte key that makes duplicate quads adjacent up to collisions.
     */
   def bucketSorted(q: Dataset[QuadRow], buckets: Int): DataFrame =
     q.toDF().drop("docId")
@@ -304,61 +276,25 @@ object Pipeline extends Serializable {
       .repartition(col("predBucket"), pmod(hash(col("subj")), lit(16)))
       .sortWithinPartitions(col("qh"))
 
+  /** Corpus-level dedup fused into the write exchange. Two equal quads
+    * share pred and subj, hence the same (predBucket, subjSalt) write
+    * partition — so the write's own repartition already co-locates
+    * duplicates, and dedup degenerates to dropping adjacent rows after
+    * the per-partition sort. Each equal-hash run (almost always a single
+    * row) is deduplicated by EXACT row comparison, so a collision can
+    * never drop a distinct quad. Output: the seven quad columns plus
+    * `predBucket`.
+    */
   def dedupForWrite(q: Dataset[QuadRow], buckets: Int = 64): DataFrame =
-    adjacentDedupUnsafe(bucketSorted(q, buckets), qhIdx = 8).drop("qh")
+    adjacentDedupUnsafe(bucketSorted(q, buckets)).drop("qh")
 
-  /** [[bucketSorted]] with the `pred` column DICTIONARY-ENCODED for the
-    * shuffle: predicates are drawn from a tiny vocabulary (ontologies,
-    * not free text), so shipping the full IRI string on every quad is
-    * the single largest avoidable wire cost of the dedup+write exchange.
-    * Known predicates travel as an int code (`predCode`) with a NULL
-    * `predStr`; unknown ones fall back to the string — lossless either
-    * way, and the encoding is injective, so byte-equality dedup over the
-    * (code, str) pair equals dedup over `pred`. `predBucket` still
-    * hashes the ORIGINAL string (same layout as the plain path);
-    * [[dedupForWriteDict]] decodes after the exchange.
-    */
-  def bucketSortedDict(q: Dataset[QuadRow], buckets: Int,
-                       dict: Map[String, Int]): DataFrame = {
-    val dictCol = map(dict.toSeq.sortBy(_._1)
-      .flatMap { case (p, c) => Seq(lit(p), lit(c)) }: _*)
-    q.toDF().drop("docId")
-      .withColumn("predBucket", pmod(hash(col("pred")), lit(buckets)))
-      .withColumn("predCode", element_at(dictCol, col("pred")))
-      .withColumn("predStr",
-        when(col("predCode").isNotNull, lit(null).cast("string")).otherwise(col("pred")))
-      .drop("pred")
-      .withColumn("qh", xxhash64(Seq("subj", "predCode", "predStr", "obj", "objKind",
-        "objDatatype", "objLang", "graph").map(col): _*))
-      .repartition(col("predBucket"), pmod(hash(col("subj")), lit(16)))
-      .sortWithinPartitions(col("qh"))
-  }
-
-  /** [[dedupForWrite]] over the dictionary-encoded exchange: same fused
-    * one-shuffle dedup, `pred` decoded back (reverse-map lookup, string
-    * fallback) after the exchange, before the write.
-    */
-  def dedupForWriteDict(q: Dataset[QuadRow], buckets: Int,
-                        dict: Map[String, Int]): DataFrame = {
-    // column layout after drop(pred): subj 0, obj 1, objKind 2,
-    // objDatatype 3, objLang 4, graph 5, predBucket 6, predCode 7,
-    // predStr 8, qh 9
-    val deduped = adjacentDedupUnsafe(bucketSortedDict(q, buckets, dict), qhIdx = 9)
-      .drop("qh")
-    val rev = map(dict.toSeq.sortBy(_._1)
-      .flatMap { case (p, c) => Seq(lit(c), lit(p)) }: _*)
-    deduped
-      .withColumn("pred", coalesce(element_at(rev, col("predCode")), col("predStr")))
-      .drop("predCode", "predStr")
-  }
-
-  private def adjacentDedupUnsafe(sorted: DataFrame, qhIdx: Int): DataFrame = {
+  private def adjacentDedupUnsafe(sorted: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
+    val qhIdx = sorted.schema.fieldIndex("qh") // bucketSorted's trailing column
     // adjacent-dedup over raw UnsafeRows (GraftInternal): the Row-encoder
     // version allocated one boxed row per quad and inverted thread scaling
     org.apache.spark.sql.GraftInternal.mapPartitionsUnsafe(sorted, { rows =>
       new Iterator[InternalRow] {
-        private val QhIdx = qhIdx // trailing qh column
         // rows share a mutable buffer → copy anything retained (one flat
         // byte-array copy per row; no boxing, no string decode)
         private var pending: InternalRow = if (rows.hasNext) {
@@ -375,13 +311,13 @@ object Pipeline extends Serializable {
         private def refill(): Unit = if (out.isEmpty && pending != null) {
           // collect the full run of hash-equal rows starting at `pending`,
           // dropping exact duplicates within it (hash-equal ≠ row-equal)
-          val h = pending.getLong(QhIdx)
+          val h = pending.getLong(qhIdx)
           val run = scala.collection.mutable.ArrayBuffer[InternalRow](pending)
           pending = null
           var done = false
           while (!done && rows.hasNext) {
             val r = rows.next()
-            if (r.getLong(QhIdx) == h) {
+            if (r.getLong(qhIdx) == h) {
               val c = r.copy()
               if (!run.exists(_ == c)) run += c
             } else { pending = r.copy(); done = true }
@@ -394,17 +330,12 @@ object Pipeline extends Serializable {
     })
   }
 
-  /** Fused dedup + materialize. `target` dispatches the sink format
-    * (path → partitioned parquet; catalog table → Iceberg with native
-    * bucket(pred) partitioning) — see [[CorpusIO.writeTriples]].
+  /** Fused dedup + predicate-bucketed materialize — ONE shuffle for
+    * both: [[dedupForWrite]]'s exchange co-locates quads of one predicate
+    * family, and the write partitions the directory tree by `predBucket`
+    * for pushdown-able reads at 100 TB (SURVEY.md §2.10). The
+    * dynamic-partition writer re-sorts by the int predBucket only.
     */
-  def dedupAndWritePartitioned(q: Dataset[QuadRow], target: String, buckets: Int = 64): Unit =
-    CorpusIO.writeTriples(dedupForWrite(q, buckets), target, buckets)
-
-  /** [[dedupAndWritePartitioned]] through the dictionary-encoded
-    * exchange ([[dedupForWriteDict]]) — same sink, fewer shuffle bytes.
-    */
-  def dedupAndWritePartitionedDict(q: Dataset[QuadRow], target: String, buckets: Int,
-                                   dict: Map[String, Int]): Unit =
-    CorpusIO.writeTriples(dedupForWriteDict(q, buckets, dict), target, buckets)
+  def dedupAndWritePartitioned(q: Dataset[QuadRow], outDir: String, buckets: Int = 64): Unit =
+    dedupForWrite(q, buckets).write.mode("overwrite").partitionBy("predBucket").parquet(outDir)
 }

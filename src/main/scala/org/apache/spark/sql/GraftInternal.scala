@@ -28,89 +28,39 @@ object GraftInternal {
       classic.queryExecution.toRdd.mapPartitions(f), classic.schema)
   }
 
-  /** Eager local checkpoint that ALSO returns the row count from the
-    * same materialization job. Iterative fixpoint loops (transitive
-    * closure, delta iteration) previously paid two jobs per round —
-    * `localCheckpoint()` (which internally materializes every partition)
-    * followed by a separate `count()` for the convergence test. This
-    * mirrors `Dataset.localCheckpoint`'s own implementation
-    * (`queryExecution.toRdd.map(_.copy()).localCheckpoint()`) but keeps
-    * the count the materialization already produces, halving the
-    * per-round driver actions (optimization guide §1.2: fix the
-    * algorithm's job structure before per-task work).
+  /** Eager local checkpoint that ALSO returns aggregates of the
+    * checkpointed rows, computed by the same materialization job.
+    * Fixpoint loops (label propagation, k-core peeling, BFS, closure
+    * doubling) need one convergence number per round — a row count, a
+    * count of changed rows, a checksum — and paying a separate action for
+    * it on top of the checkpoint doubles the per-round driver actions
+    * (optimization guide §1.2).
+    *
+    * `aggs` are plain SQL aggregates (`count(lit(1))`,
+    * `count_if(col("component") =!= col("prev"))`,
+    * `sum(col("component").cast("decimal(38,0)"))`), returned in order as
+    * one Row; on an empty frame they follow SQL (count 0, sum null). They
+    * ride an `observe` at the root of the checkpointed plan, so they are
+    * computed in the result stage, where Spark applies each task's
+    * update exactly once.
+    *
+    * Why not `df.observe(...).localCheckpoint()`: the public checkpoint
+    * stamps the origin plan's size estimate onto its result, and those
+    * small estimates let the optimizer inject a runtime bloom filter into
+    * resolveSameAs's rewrite tail — a whole-graph aggregation pass and
+    * one more job per call (measured on the benchmark's analytics
+    * workload). The frame returned here carries no estimate, so the
+    * planner keeps the plans the fixpoint callers are tuned for.
     */
-  def localCheckpointWithCount(df: DataFrame): (DataFrame, Long) = {
-    val classic = df.asInstanceOf[ClassicDataFrame]
-    val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    val rdd = classic.queryExecution.toRdd.map(_.copy())
+  def localCheckpointWith(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+    val name = s"graft_checkpoint_${java.util.UUID.randomUUID()}"
+    val observed = df.observe(name, aggs.head, aggs.tail: _*).asInstanceOf[ClassicDataFrame]
+    val spark = observed.sparkSession.asInstanceOf[ClassicSparkSession]
+    val rdd = observed.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    val n = rdd.count()
-    (spark.internalCreateDataFrame(rdd, classic.schema), n)
-  }
-
-  /** [[localCheckpointWithCount]] variant that additionally counts the
-    * rows whose boolean column `predCol` is true, still in the single
-    * materialization job. Fixpoint loops whose convergence test is a
-    * predicate over the just-materialized round (label ≠ previous label,
-    * degree < k, ...) previously paid a separate `isEmpty`/`filter.count`
-    * action per round on top of the checkpoint — guide §1.2 again: the
-    * probe is free if it rides the materialization pass.
-    */
-  def localCheckpointWithPredCount(df: DataFrame,
-                                   predCol: String): (DataFrame, Long, Long) = {
-    val classic = df.asInstanceOf[ClassicDataFrame]
-    val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    val ord = classic.schema.fieldIndex(predCol)
-    val rdd = classic.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val (n, nTrue) = rdd.mapPartitions { it =>
-      var total = 0L
-      var t = 0L
-      while (it.hasNext) {
-        val r = it.next()
-        total += 1
-        if (!r.isNullAt(ord) && r.getBoolean(ord)) t += 1
-      }
-      Iterator.single((total, t))
-    }.fold((0L, 0L)) { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) }
-    (spark.internalCreateDataFrame(rdd, classic.schema), n, nTrue)
-  }
-
-  /** [[localCheckpointWithCount]] variant that additionally sums a
-    * DecimalType column during the materialization pass (null when every
-    * value is null, mirroring SQL `sum`). For fixpoint loops whose
-    * convergence test is a checksum aggregate of the round (connected
-    * components' label sum, star CC's edge-hash sum): the caller casts
-    * the checksum into a column of the round frame and the separate
-    * per-round aggregation action disappears.
-    */
-  def localCheckpointWithCountAndDecimalSum(
-      df: DataFrame, sumCol: String): (DataFrame, Long, java.math.BigDecimal) = {
-    val classic = df.asInstanceOf[ClassicDataFrame]
-    val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    val ord = classic.schema.fieldIndex(sumCol)
-    val dt = classic.schema(sumCol).dataType
-      .asInstanceOf[org.apache.spark.sql.types.DecimalType]
-    val (p, s) = (dt.precision, dt.scale)
-    val rdd = classic.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val (n, sum, any) = rdd.mapPartitions { it =>
-      var total = 0L
-      var acc = java.math.BigDecimal.ZERO
-      var seen = false
-      while (it.hasNext) {
-        val r = it.next()
-        total += 1
-        if (!r.isNullAt(ord)) {
-          acc = acc.add(r.getDecimal(ord, p, s).toJavaBigDecimal)
-          seen = true
-        }
-      }
-      Iterator.single((total, acc, seen))
-    }.fold((0L, java.math.BigDecimal.ZERO, false)) {
-      case ((n1, s1, a1), (n2, s2, a2)) => (n1 + n2, s1.add(s2), a1 || a2)
-    }
-    (spark.internalCreateDataFrame(rdd, classic.schema), n, if (any) sum else null)
+    rdd.count()
+    (spark.internalCreateDataFrame(rdd, observed.schema),
+      observed.queryExecution.observedMetrics(name))
   }
 
   /** True when `df` is ALREADY a materialized RDD (a local/reliable

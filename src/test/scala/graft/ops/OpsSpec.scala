@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftInternal.localCheckpointWith
 
 /** Training-data operator semantics + the portable-hash contract that the
   * DuckDB oracles rely on (JVM mirror == Spark column value), plus
@@ -480,36 +481,30 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"embedding near-dup degenerated to all-pairs:\n$p2")
   }
 
-  test("localCheckpointWithPredCount: counts ride the materialization and match SQL") {
+  test("localCheckpointWith: count and count_if ride the materialization, match SQL") {
     val sp = spark; import sp.implicits._
     val df = Seq((1L, true), (2L, false), (3L, true), (4L, true))
       .toDF("id", "flag")
       .withColumn("flag", when(col("id") === 2L, lit(null)).otherwise(col("flag")))
-    val (out, n, nTrue) =
-      org.apache.spark.sql.GraftInternal.localCheckpointWithPredCount(df, "flag")
-    assert(n == 4L && nTrue == 3L) // null counts as not-true, like a SQL filter
+    val (out, r) = localCheckpointWith(df, count(lit(1)), count_if(col("flag")))
+    assert(r.getLong(0) == 4L && r.getLong(1) == 3L) // null counts as not-true, like a SQL filter
     assert(out.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
-    val (_, n0, t0) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithPredCount(df.filter(col("id") > 100), "flag")
-    assert(n0 == 0L && t0 == 0L)
+    val (_, r0) = localCheckpointWith(df.filter(col("id") > 100), count(lit(1)), count_if(col("flag")))
+    assert(r0.getLong(0) == 0L && r0.getLong(1) == 0L)
   }
 
-  test("localCheckpointWithCountAndDecimalSum matches SQL sum incl. null cases") {
+  test("localCheckpointWith: decimal sum matches SQL sum incl. null cases") {
     val sp = spark; import sp.implicits._
     val df = Seq(Some(10L), Some(20L), None, Some(30L)).toDF("v")
-      .withColumn("__cs", col("v").cast("decimal(38,0)"))
-    val (out, n, s) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithCountAndDecimalSum(df, "__cs")
-    assert(n == 4L && s.compareTo(new java.math.BigDecimal(60)) == 0)
+    val cs = sum(col("v").cast("decimal(38,0)"))
+    val (out, r) = localCheckpointWith(df, count(lit(1)), cs)
+    assert(r.getLong(0) == 4L && r.getDecimal(1).compareTo(new java.math.BigDecimal(60)) == 0)
     assert(out.count() == 4L)
     // all-null and empty frames sum to null, mirroring SQL sum()
-    val allNull = Seq("a", "b").toDF("v")
-      .withColumn("__cs", lit(null).cast("decimal(38,0)"))
-    val (_, n1, s1) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithCountAndDecimalSum(allNull, "__cs")
-    assert(n1 == 2L && s1 == null)
-    val (_, n2, s2) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithCountAndDecimalSum(allNull.filter(col("v") === "zz"), "__cs")
-    assert(n2 == 0L && s2 == null)
+    val allNull = Seq("a", "b").toDF("v").withColumn("v", lit(null).cast("long"))
+    val (_, r1) = localCheckpointWith(allNull, count(lit(1)), cs)
+    assert(r1.getLong(0) == 2L && r1.getDecimal(1) == null)
+    val (_, r2) = localCheckpointWith(allNull.filter(col("v") === 1L), count(lit(1)), cs)
+    assert(r2.getLong(0) == 0L && r2.getDecimal(1) == null)
   }
 }

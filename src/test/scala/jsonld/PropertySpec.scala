@@ -11,6 +11,7 @@ import jsonld.core.Rdf._
   * - canonicalization is invariant under blank-node relabeling and quad
   *   shuffling
   * - N-Quads serialize∘parse is the identity on datasets
+  * - N-Quads escaping agrees with a char-by-char reference
   */
 class PropertySpec extends AnyFunSuite {
 
@@ -100,6 +101,27 @@ class PropertySpec extends AnyFunSuite {
         val b = parsed.allQuads.map { case (g, q) => toNQuad(q, if (g == "@default") "" else g) }.sorted
         assert(a == b)
       }
+    }
+  }
+
+  test("escape matches a char-by-char reference and parseNQuads round-trips it") {
+    def reference(s: String): String = s.flatMap {
+      case '\\' => "\\\\"
+      case '"' => "\\\""
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c => c.toString
+    }
+    // each escapable character at the start, middle and end, alone, and mixed
+    val inputs = Seq('\\', '"', '\n', '\r', '\t').flatMap { c =>
+      Seq(s"${c}ab", s"a${c}b", s"ab$c", c.toString)
+    } ++ Seq("x\\y\"z\nw\rv\tu", "\t\"\\\r\n", "plain", "")
+    inputs.foreach { s =>
+      assert(escape(s) == reference(s), s"escape(${reference(s)})")
+      val lit = RLiteral(s, XsdString, "")
+      val line = toNQuad(Quad(RIri("http://ex.org/s"), RIri("http://ex.org/p"), lit, null), "")
+      assert(parseNQuads(line).allQuads.map(_._2.obj) == Seq(lit), line)
     }
   }
 
