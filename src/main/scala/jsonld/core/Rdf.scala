@@ -127,6 +127,7 @@ object Rdf {
   private def needsEscape(c: Char): Boolean =
     c == '\\' || c == '"' || c == '\n' || c == '\r' || c == '\t'
 
+  /** One N-Quads line (with trailing " .\n"). graphName "" = default graph. */
   def toNQuad(q: Quad, graphName: String): String = {
     val sb = new StringBuilder(128)
     q.subject match {

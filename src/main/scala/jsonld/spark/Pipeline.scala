@@ -249,7 +249,10 @@ object Pipeline extends Serializable {
       dedupAndWritePartitioned(quads(pipe), graph, buckets)
       CorpusIO.markDone(spark, graph)
     }
-    spark.read.parquet(graph).drop("predBucket")
+    // explicit schema: a run that yields no quads leaves no data file under
+    // partitionBy, so there would be nothing to infer the schema from
+    spark.read.schema(dedupForWrite(spark.emptyDataset[QuadRow], buckets).schema)
+      .parquet(graph).drop("predBucket")
   }
 
   private val graphCols =

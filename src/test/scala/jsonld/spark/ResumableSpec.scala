@@ -64,6 +64,24 @@ class ResumableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graph.columns.contains("predBucket"))
   }
 
+  test("runResumable on a corpus without JSON-LD returns an empty 7-column graph, also on resume") {
+    val work = Files.createTempDirectory("graft-resume-empty").toString
+    val files = (0 until 5).map(i =>
+      RepoFile(s"org$i", s"src/F$i.scala", "c0", "scala", s"object F$i { val x = $i }"))
+    val corpus = spark.createDataset(files)(Encoders.product[RepoFile])
+    val ctx = spark.sparkContext.broadcast(Map.empty[String, String])
+    val cols = Seq("subj", "pred", "obj", "objKind", "objDatatype", "objLang", "graph")
+
+    val first = Pipeline.runResumable(spark, corpus, work, ctx, buckets = 8)
+    assert(first.columns.toSeq == cols)
+    assert(first.count() == 0)
+    assert(CorpusIO.stageDone(spark, s"$work/graph"))
+
+    val second = Pipeline.runResumable(spark, corpus, work, ctx, buckets = 8)
+    assert(second.columns.toSeq == cols)
+    assert(second.count() == 0)
+  }
+
   test("dedupAndWritePartitioned writes a predBucket-partitioned parquet graph") {
     val rows = (0 until 12).map(i =>
       QuadRow(s"d$i", s"http://ex.org/s$i", s"http://ex.org/p${i % 3}", s"o$i",
